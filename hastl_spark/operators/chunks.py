@@ -41,7 +41,7 @@ def gorilla_chunks(tier_df: DataFrame, value_col: str,
       point. Points per chunk are bounded by N / tier-bucket-seconds.
     """
 
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(key, pdf):
         source = key[0]
         pdf = pdf.sort_values("bucket")
         ts = (pdf["bucket"].astype("int64") // 10**9).to_numpy()

@@ -13,8 +13,8 @@ points, comfortably one task even at 10^12 input sequences. The skew-heavy
 dimension (docs per source) was already collapsed by the salted rollup.
 For windows beyond that (decades of minutes, or second-granularity tiers),
 pass ``chunk_buckets``: the grid is split into fixed-size chunks with a
-halo of surrounding buckets, one STL task per (source, chunk), interiors
-stitched — bounding every task regardless of series length. With the
+halo of surrounding buckets, one STL group per (source, chunk), interiors
+stitched — bounding every group regardless of series length. With the
 default ``n_outer=1`` the kernel applies no cross-chunk statistic (the
 robustness-weight update is skipped on the last outer pass), and every
 loess window is local, so a halo covering the widest window
@@ -28,6 +28,15 @@ NaNs occurring anywhere before it — a global dependence on the NaN prefix
 count that no windowed computation can reproduce. The chunked path is
 therefore "reference STL applied to each chunk window"; the unchunked
 default remains the globally reference-exact path.
+
+Parallelism: the rolled-up input is small in bytes, so both paths pin the
+grouped map's partition count (AQE would otherwise coalesce it into one or
+two tasks). The unchunked path uses ``_grouped_map_partitions`` (keyed by
+source; 256 when the caller passes no key count). The chunked path
+collects its per-key bounds first (one job, one row per key), counts the
+(key, chunk) groups that will run, and plans ``max(2 x cores, groups)``
+partitions — an incremental refresh of a few chunks runs a few Python
+tasks, not 256 mostly empty ones.
 """
 
 from __future__ import annotations
@@ -114,12 +123,12 @@ def stl_gapfill(
     if chunk_buckets is not None:
         return _stl_gapfill_chunked(rollup, value_col, bucket_seconds, n_p,
                                     params, key_col, chunk_buckets,
-                                    halo_buckets, only_chunks, n_keys)
+                                    halo_buckets, only_chunks)
     if only_chunks is not None:
         raise ValueError("only_chunks requires chunk_buckets (incremental "
                          "recomputation is defined on the chunked grid)")
 
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(key, pdf):
         source = key[0]
         pdf = pdf.sort_values("bucket")
         # duplicate buckets (shouldn't occur in rollup output, but) keep
@@ -166,18 +175,23 @@ def stl_gapfill(
 
 
 def _grouped_map_partitions(df: DataFrame, n_keys: int | None = None) -> int:
-    """Partition count for grouped-map stages: cores x 2 with a FLOOR well
-    above the group-key count. With few distinct keys (e.g. 64 sources) and
-    partitions ~ cores, hash collisions put 3-4x more keys in some
-    partitions than others and the stage wall is that straggler — measured
-    as THE scaling-efficiency killer (gap-fill 0.55, chunk encode 0.34 at
-    2->8 cores). Partitions >= 4x keys dilute collisions to ~one key per
-    partition, so the stage load-balances at any core count.
+    """Partition count for grouped-map stages keyed by a column of unknown
+    spread: cores x 2 with a FLOOR well above the group-key count. With few
+    distinct keys and partitions ~ cores, hash collisions put 3-4x more
+    keys in some partitions than others and the stage wall is that
+    straggler. On a 32-core host this was measured as the scaling killer
+    at local[2] -> local[8] (efficiency 0.55 for gap-fill, 0.34 for chunk
+    encode); partitions >= 4x keys dilute collisions to ~one key per
+    partition.
 
     When the caller knows the key cardinality (``n_keys``), the floor is
-    4x that — a 5-key query then schedules ~64 tasks, not 256 (at toy
-    scale the fixed ~5-10ms/task of 200 empty grouped-map tasks is a
-    visible constant). Unknown cardinality keeps the conservative 256."""
+    4x that. Re-measured on a 4-vCPU host (local[4], 4 sources x 7 days of
+    minutes, unchunked gap-fill): 8 or 16 partitions ran the stage in
+    0.77 s, the 256 floor in 1.44 s — empty Python tasks, not collisions,
+    dominate at that size. Unknown cardinality still keeps 256: those
+    callers (contract queries, downsample, packing) may group hundreds of
+    keys, where ~cores partitions would straggle. The chunked gap-fill does
+    not use this: it counts its (key, chunk) groups exactly."""
     dp2 = df.sparkSession.sparkContext.defaultParallelism * 2
     floor = 256 if n_keys is None else min(256, 4 * int(n_keys))
     return max(dp2, floor)
@@ -186,11 +200,10 @@ def _grouped_map_partitions(df: DataFrame, n_keys: int | None = None) -> int:
 def _stl_gapfill_chunked(rollup: DataFrame, value_col: str, bucket_seconds: int,
                          n_p: int, params: dict, key_col: str,
                          chunk_buckets: int, halo_buckets: int | None,
-                         only_chunks: list[int] | None = None,
-                         n_keys: int | None = None) -> DataFrame:
+                         only_chunks: list[int] | None = None) -> DataFrame:
     """Grid-chunked STL gap-fill: split the bucket grid into
     ``chunk_buckets``-sized chunks, extend each by a halo wide enough to
-    cover the widest loess window, run one STL task per (key, chunk), emit
+    cover the widest loess window, run one STL call per (key, chunk), emit
     only chunk interiors (an exact partition of the global grid — no
     overlap, no stitch seams).
 
@@ -226,32 +239,47 @@ def _stl_gapfill_chunked(rollup: DataFrame, value_col: str, bucket_seconds: int,
         raise ValueError(f"chunk_buckets={C} must be >= 2*n_p={2 * n_p}")
     D = -(-H // C)  # neighbors per side a halo can span (ceil(H/C))
 
-    bounds = rollup.groupBy(key_col).agg(F.min("bucket").alias("_g0"),
-                                         F.max("bucket").alias("_g1"))
-    df = rollup.join(F.broadcast(bounds), key_col)
-    pos = (F.unix_timestamp("bucket") / bucket_seconds).cast("long")
-    p0c = (F.unix_timestamp("_g0") / bucket_seconds).cast("long")
-    p1c = (F.unix_timestamp("_g1") / bucket_seconds).cast("long")
+    def pos_of(c):
+        return (F.unix_timestamp(c) / bucket_seconds).cast("long")
+
+    # per-key grid bounds: one row per key, collected once. The driver sizes
+    # the grouped map from them and the same rows feed the halo join, so
+    # the aggregate is not recomputed inside the gap-fill plan.
+    bounds = (rollup.groupBy(key_col)
+              .agg(pos_of(F.min("bucket")).alias("_p0"),
+                   pos_of(F.max("bucket")).alias("_p1"))
+              .dropna())
+    rows = bounds.collect()
+    # (key, chunk) groups that will run: each key's chunk range, cut to
+    # only_chunks when given (int(p / C) truncates as the cast below does)
+    only = None if only_chunks is None else {int(c) for c in only_chunks}
+    n_groups = 0
+    for r in rows:
+        c0, c1 = int(r["_p0"] / C), int(r["_p1"] / C)
+        n_groups += (c1 - c0 + 1 if only is None
+                     else sum(c0 <= c <= c1 for c in only))
+    spark = rollup.sparkSession
+    df = rollup.join(F.broadcast(spark.createDataFrame(rows, bounds.schema)),
+                     key_col)
+    pos = pos_of("bucket")
+    p0c, p1c = F.col("_p0"), F.col("_p1")
     k0 = (pos / C).cast("long")
     members = F.filter(
         F.transform(F.sequence(F.lit(-D), F.lit(D)), lambda d: k0 + d),
         lambda m: (m >= (p0c / C).cast("long")) & (m <= (p1c / C).cast("long"))
         & (pos >= m * C - H) & (pos <= (m + 1) * C - 1 + H),
     )
-    df = df.select(
-        key_col, "bucket", "cnt", value_col,
-        p0c.alias("_p0"), p1c.alias("_p1"),
-        F.explode(members).alias("_chunk"),
-    )
+    df = df.select(key_col, "bucket", "cnt", value_col, "_p0", "_p1",
+                   F.explode(members).alias("_chunk"))
     if only_chunks is not None:
         # incremental mode: recompute ONLY the named (epoch-anchored) chunks.
         # Bounds above were computed on the FULL series — an incremental run
         # must see true per-key edges, or grid clipping at the filter
         # boundary would shift NaN prefixes (the stl.fut low-pass hazard
         # documented in the module docstring) and silently change values.
-        df = df.filter(F.col("_chunk").isin([int(c) for c in only_chunks]))
+        df = df.filter(F.col("_chunk").isin(sorted(only)))
 
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(key, pdf):
         source, k = key[0], int(key[1])
         kp0 = int(pdf["_p0"].iloc[0])
         kp1 = int(pdf["_p1"].iloc[0])
@@ -291,6 +319,8 @@ def _stl_gapfill_chunked(rollup: DataFrame, value_col: str, bucket_seconds: int,
         })
 
     schema = GAPFILL_SCHEMA.replace("source string", f"{key_col} string")
-    df = df.repartition(_grouped_map_partitions(rollup, n_keys),
-                        F.col(key_col), F.col("_chunk"))
+    # one partition per group, floored at 2x cores: a refresh that runs a
+    # dozen groups schedules a dozen Python tasks, not 256 mostly empty ones
+    n_part = max(2 * spark.sparkContext.defaultParallelism, n_groups)
+    df = df.repartition(n_part, F.col(key_col), F.col("_chunk"))
     return df.groupBy(key_col, "_chunk").applyInPandas(fn, schema)

@@ -28,7 +28,7 @@ def loess_smooth(series: DataFrame, q: int, degree: int = 1,
     schema = (f"{key_col} string, {order_col} timestamp, "
               f"{value_col} double, smoothed double")
 
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(key, pdf):
         pdf = pdf.sort_values(order_col)
         y = pdf[value_col].astype("float64").to_numpy()
         out = loess_fit(y, q=q, degree=degree, jump=jump)

@@ -24,7 +24,7 @@ def trend_strength(decomp: DataFrame, key_col: str = "source",
                    n_keys: int | None = None) -> DataFrame:
     """decomp(key, order, trend, seasonal, ...) ->
     (key, trend_magnitude, seasonal_amplitude), one row per key."""
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(key, pdf):
         pdf = pdf.sort_values(order_col)
         t = pdf["trend"].to_numpy(dtype=np.float32)[None, :]
         s = pdf["seasonal"].to_numpy(dtype=np.float32)[None, :]

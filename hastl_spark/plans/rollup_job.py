@@ -15,6 +15,7 @@ buckets >= N (Iceberg snapshot-diff stand-in); MERGE keeps prior rows.
 from __future__ import annotations
 
 import argparse
+import datetime
 import json
 import os
 import time
@@ -36,6 +37,33 @@ from hastl_spark.sources.tables import (CHUNK_SPEC, DAY_SPEC, MONTH_SPEC,
 # month-or-finer incremental granularity)
 DEFAULT_CHUNK_SECONDS = {"1m": 7 * 86400, "1h": 365 * 86400,
                          "1d": 3650 * 86400, "gapfill_1m": 7 * 86400}
+
+
+def _utc_seconds(ts: str) -> int:
+    """Epoch seconds of a UTC day ('2026-01-04') or watermark timestamp
+    ('2026-01-04 23:59:00') as the tables' manifests record them."""
+    return int(datetime.datetime.fromisoformat(ts)
+               .replace(tzinfo=datetime.timezone.utc).timestamp())
+
+
+def clip_touched_chunks(chunk_ids, watermark_map: dict, chunk_buckets: int,
+                        bucket_seconds: int = 60) -> tuple[list[int], int]:
+    """Cut touched gap-fill chunk ids to the chunks a day-partitioned 1m
+    table holds, from its manifest: a ``source~day`` partition starts no
+    earlier than the day and ends at its watermark (max bucket). Returns
+    the kept ids and the (source, chunk) group count they run as."""
+    C = int(chunk_buckets)
+    spans: dict = {}
+    for part, wm in watermark_map.items():
+        src, day = part.rsplit(PART_SEP, 1)
+        c0 = _utc_seconds(day) // bucket_seconds // C
+        c1 = _utc_seconds(wm) // bucket_seconds // C
+        lo, hi = spans.get(src, (c0, c1))
+        spans[src] = (min(lo, c0), max(hi, c1))
+    per_src = [[k for k in chunk_ids if lo <= k <= hi]
+               for lo, hi in spans.values()]
+    return (sorted({k for ks in per_src for k in ks}),
+            sum(len(ks) for ks in per_src))
 
 
 def run_pipeline(
@@ -130,7 +158,7 @@ def run_pipeline(
     t0 = _mark("merge_1m", t0)
     days = sorted({p.split(PART_SEP)[1] for p in metrics["tier_1m"]["partitions"]})
     # source cardinality sizes the grouped-map partition floors (4x keys)
-    # in gap-fill and chunk encode instead of the blind 256-per-stage worst
+    # in unchunked gap-fill and chunk encode instead of the blind 256 worst
     # case. It must come from the table MANIFEST's full partition set, not
     # this merge's lineage: the frames those floors size are FULL-TABLE
     # reads, and an incremental run touching a subset of sources would
@@ -150,8 +178,8 @@ def run_pipeline(
         # exactly on dense grids only (see operators/gapfill.py docstring).
         kw = dict(stl_kwargs or {})
         if not kw.get("chunk_buckets"):
-            # chunked mode's group keys are (source x chunk) — more than
-            # n_sources — so the cardinality hint applies only unchunked
+            # the unchunked grouped map is keyed by source alone; the
+            # chunked path sizes itself from its (source x chunk) groups
             kw.setdefault("n_keys", n_sources)
         if incremental_gapfill and t_gap.exists():
             from hastl_spark.operators.gapfill import (default_halo_buckets,
@@ -159,8 +187,6 @@ def run_pipeline(
             if not kw.get("chunk_buckets"):
                 raise ValueError("incremental_gapfill requires "
                                  "stl_kwargs['chunk_buckets']")
-            import datetime
-
             bsec = kw.get("bucket_seconds", 60)
             # 'is None', not 'or': an explicit halo_buckets=0 must make the
             # touched-chunk set match the halo stl_gapfill actually applies
@@ -172,12 +198,14 @@ def run_pipeline(
                             "n_inner", "n_outer", "q_t", "q_l", "d_t", "d_l")})
             ranges = []
             for d in days:
-                lo = datetime.datetime.fromisoformat(d + "T00:00:00+00:00")
-                lo_pos = int(lo.timestamp()) // bsec
+                lo_pos = _utc_seconds(d) // bsec
                 ranges.append((lo_pos, lo_pos + 86400 // bsec - 1))
-            kw["only_chunks"] = touched_chunk_ids(
-                ranges, kw["chunk_buckets"], halo)
+            kw["only_chunks"], n_groups = clip_touched_chunks(
+                touched_chunk_ids(ranges, kw["chunk_buckets"], halo),
+                metrics["tier_1m"]["watermark_map"], kw["chunk_buckets"],
+                bsec)
             metrics["gapfill_chunks_recomputed"] = len(kw["only_chunks"])
+            metrics["gapfill_groups_recomputed"] = n_groups
         gap = stl_gapfill(cur_1m, **kw)
         rec = t_gap.merge_upsert(spark, gap, watermark_col="bucket",
                                  keep_data=do_gorilla)
@@ -318,8 +346,6 @@ def run_pipeline(
                     # The gapfill tier's touched set comes from the
                     # gap-fill MERGE's own partitions — its halo rewrites
                     # days beyond the 1m merge's set
-                    import datetime as _dt
-
                     tier_days = days
                     if tier == "gapfill_1m":
                         tier_days = sorted({
@@ -327,8 +353,7 @@ def run_pipeline(
                             for p in metrics["gapfill_1m"]["partitions"]})
                     win_set: set[int] = set()
                     for d in tier_days:
-                        d0 = int(_dt.datetime.fromisoformat(
-                            d + "T00:00:00+00:00").timestamp())
+                        d0 = _utc_seconds(d)
                         win_set.update(range(d0 // W, (d0 + 86399) // W + 1))
                     wins = sorted(win_set)
                     n_windows[tier] = len(wins)

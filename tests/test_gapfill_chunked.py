@@ -8,6 +8,9 @@ every low-pass window by the global NaN-prefix count — so the gappy test
 pins a bounded approximation plus exact passthrough of observed values.
 """
 
+import re
+import warnings
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -145,3 +148,54 @@ def test_only_chunks_matches_full_chunked(spark):
     for col in ("y", "seasonal", "trend", "remainder", "gapfilled"):
         np.testing.assert_array_equal(sub[col].values, exp[col].values,
                                       err_msg=col)
+
+
+def _hourly_df(spark, n_sources, n_hours):
+    # 2026-01-01 is epoch hour 490896, a multiple of 48: chunks of 48
+    # hourly buckets line up with the frame, n_hours / 48 chunks per source
+    buckets = pd.date_range("2026-01-01", periods=n_hours, freq="3600s")
+    y = gen_harmonic(out_len=n_hours, n_p=N_P, nan_frac=0.0,
+                     trend_coeff=0.001, noise_level=0.05, seed=5)
+    pdf = pd.concat([pd.DataFrame({"source": f"s{i}", "bucket": buckets,
+                                   "cnt": 1, "sum_n_tok": y.astype("float64")})
+                     for i in range(n_sources)])
+    return spark.createDataFrame(pdf)
+
+
+def _planned_partitions(df) -> list[int]:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [int(n) for n in
+            re.findall(r"hashpartitioning\([^)]*_chunk[^)]*, (\d+)\)", plan)]
+
+
+def test_chunked_partitions_sized_by_groups(spark):
+    """The chunked grouped map plans one partition per (source, chunk)
+    group that runs, floored at 2x cores — not a fixed 256."""
+    dp2 = 2 * spark.sparkContext.defaultParallelism
+    k0 = 490896 // 48
+
+    def parts(df, **kw):
+        return _planned_partitions(stl_gapfill(
+            df, value_col="sum_n_tok", bucket_seconds=3600, n_p=N_P,
+            q_s=13, d_s=0, chunk_buckets=48, **kw))
+
+    small = _hourly_df(spark, 2, 3 * 48)          # 2 sources x 3 chunks
+    assert parts(small) == [max(dp2, 6)]
+    assert parts(small, only_chunks=[k0 + 1]) == [max(dp2, 2)]
+    wide = _hourly_df(spark, 2, 12 * 48)          # 2 sources x 12 chunks
+    assert parts(wide) == [max(dp2, 24)]
+    # chunk ids outside a source's range run no group
+    assert parts(wide, only_chunks=[k0 - 5, k0, k0 + 99]) == [max(dp2, 2)]
+
+
+def test_gapfill_raises_no_user_warning(spark):
+    # a partly annotated grouped-map function makes applyInPandas warn that
+    # it cannot infer the eval type; both gap-fill paths must stay silent
+    df = _hourly_df(spark, 2, 3 * 48)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        for kw in ({}, {"chunk_buckets": 48}):
+            stl_gapfill(df, value_col="sum_n_tok", bucket_seconds=3600,
+                        n_p=N_P, q_s=13, d_s=0, **kw).count()
+    assert [str(w.message) for w in caught
+            if issubclass(w.category, UserWarning)] == []

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from hastl_spark.operators.gapfill import (default_halo_buckets,
                                            touched_chunk_ids)
-from hastl_spark.plans.rollup_job import run_pipeline
+from hastl_spark.plans.rollup_job import clip_touched_chunks, run_pipeline
 from hastl_spark.sources.sequences import SEQS_PER_BUCKET, generate_sequences
 from hastl_spark.sources.tables import PART_SEP, KeyedTable
 
@@ -39,6 +39,37 @@ def test_touched_chunk_ids():
     assert touched_chunk_ids([(100, 199)], 100, 50) == [0, 1, 2]
     assert touched_chunk_ids([(0, 9)], 100, 10) == [-1, 0]
     assert touched_chunk_ids([(250, 260), (950, 960)], 100, 0) == [2, 9]
+
+
+def test_clip_touched_chunks():
+    # C = one day of minutes, so chunk id = epoch day; 2026-01-01 is day 20454
+    d0 = 20454
+    wm = {"s1~2026-01-01": "2026-01-01 23:59:00",
+          "s1~2026-01-02": "2026-01-02 23:59:00",
+          "s2~2026-01-02": "2026-01-02 12:00:00"}
+    kept, groups = clip_touched_chunks([d0 - 1, d0, d0 + 1, d0 + 2], wm, 1440)
+    assert kept == [d0, d0 + 1]
+    assert groups == 3  # s1: two days, s2: one
+
+
+@pytest.mark.slow
+def test_refresh_records_clipped_chunks_and_groups(spark, tmp_path):
+    """A one-day refresh at the series end: the halo (q_s=7 -> 1250
+    buckets) reaches one chunk either side, but the chunk after the last
+    day holds no data, so 2 chunk ids x 2 sources = 4 groups run."""
+    seqs = generate_sequences(spark, n_sources=2, n_buckets=3 * 1440,
+                              base_rate=4.0, tok_lo=4, tok_hi=16,
+                              with_tokens=True).cache()
+    out = str(tmp_path / "inc")
+    kw = dict(do_gorilla=False, check_invariant=False, stl_kwargs=STL_KW,
+              incremental_gapfill=True)
+    run_pipeline(spark, seqs.filter(_bucket_of(F.col("doc_id")) < 2 * 1440),
+                 out, **kw)
+    m2 = run_pipeline(
+        spark, seqs.filter(_bucket_of(F.col("doc_id")) >= 2 * 1440), out, **kw)
+    assert m2["gapfill_chunks_recomputed"] == 2
+    assert m2["gapfill_groups_recomputed"] == 4
+    seqs.unpersist()
 
 
 @pytest.mark.slow
@@ -157,7 +188,7 @@ def test_incremental_anchored_chunks_rewrite_only_touched_windows(spark, tmp_pat
     anchored recompute."""
     from hastl_spark.plans.rollup_job import run_pipeline
 
-    CS = {"1m": 86400, "1h": 365 * 86400, "1d": 3650 * 86400,
+    CS ={"1m": 86400, "1h": 365 * 86400, "1d": 3650 * 86400,
           "gapfill_1m": 86400}
     seqs = _seqs(spark)
     first = seqs.filter(_bucket_of(F.col("doc_id")) < 3 * 1440)

@@ -149,3 +149,23 @@ def test_find_lambda_formula():
     lam = find_lambda(nn_idx, l_idx, np.array([4]), 5, np.array([10]))
     # window idx 2..6 -> values 2..6 -> max(|2-4|,|6-4|)=2
     assert lam[0, 0] == 2.0
+
+
+@pytest.mark.parametrize("degree", [0, 1, 2])
+def test_loess_block_size_is_exact(degree):
+    # eval-point blocking is per-point independent: one point per block
+    # (max_cells=q), two blocks (2^16) and the whole grid in one (2^25)
+    # must give bit-identical fits and slopes on a gappy batch
+    rng = np.random.default_rng(11)
+    B, n, q = 3, 1000, 31
+    Y = np.sin(np.arange(n) / 9.0)[None, :] + rng.normal(0, 0.3, (B, n))
+    Y[rng.random((B, n)) < 0.1] = np.nan
+    nn_y, nn_idx, n_nn = filter_pad_nans(Y)
+    m_vals = np.arange(n, dtype=np.int64)
+    l_idx, lam = loess_params(q, m_vals, nn_idx, n_nn)
+    ww = np.ones((B, n))
+    runs = [loess(nn_idx, nn_y, ww, q, m_vals, l_idx, lam, n_nn, degree,
+                  max_cells=c) for c in (q, 1 << 16, 1 << 25)]
+    for fit, slope in runs[1:]:
+        np.testing.assert_array_equal(fit, runs[0][0])
+        np.testing.assert_array_equal(slope, runs[0][1])
