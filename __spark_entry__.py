@@ -418,7 +418,7 @@ def q_label_centroid_norm(spark, sf_dir):
 def q_stl_gapfill_1h(spark, sf_dir):
     h1 = _rollup_events_1h_raw(spark, sf_dir)
     gap = stl_gapfill(h1, value_col="cnt", bucket_seconds=3600, n_p=24, q_s=13,
-                      d_s=0, key_col="event_type", n_keys=8)
+                      d_s=0, key_col="event_type")
     return gap.select(
         "event_type", "bucket", "y",
         F.round("seasonal", 4).alias("seasonal"),
@@ -442,7 +442,7 @@ def q_gapfill_diag(spark, sf_dir):
 
     h1 = _rollup_events_1h_raw(spark, sf_dir)
     gap = stl_gapfill(h1, value_col="cnt", bucket_seconds=3600, n_p=24,
-                      q_s=13, d_s=0, key_col="event_type", n_keys=8)
+                      q_s=13, d_s=0, key_col="event_type")
     # Arrow maps a NaN in a nullable float column to NULL on the way out of
     # applyInPandas — a grid hole surfaces as y IS NULL; accept either form
     def _absent(c):
@@ -486,7 +486,7 @@ def q_gorilla_roundtrip_1h(spark, sf_dir):
     from hastl_spark.operators.chunks import decode_chunks_df, gorilla_chunks
 
     h1 = _rollup_events_1h_raw(spark, sf_dir).withColumnRenamed("event_type", "source")
-    ch = gorilla_chunks(h1, "sum_value", n_keys=8)
+    ch = gorilla_chunks(h1, "sum_value")
     pts = decode_chunks_df(ch)
     return pts.select(
         "source",
@@ -753,7 +753,7 @@ def q_loess_smooth_1h(spark, sf_dir):
     dense = densify_grid(h1, bucket_seconds=3600, key_col="event_type")
     series = dense.select("event_type", "bucket", F.col("sum_value").alias("y"))
     sm = loess_smooth(series, q=25, degree=1, jump=1,
-                      key_col="event_type", order_col="bucket", n_keys=5)
+                      key_col="event_type", order_col="bucket")
     return sm.select("event_type", "bucket", F.round("y", 4).alias("y"),
                      F.round("smoothed", 4).alias("smoothed"))
 
@@ -761,13 +761,11 @@ def q_loess_smooth_1h(spark, sf_dir):
 def q_trend_strength(spark, sf_dir):
     """Per-event_type trend magnitude + seasonal amplitude of the hourly
     count series (reference entries stl.fut:481-500), via the
-    trend_strength operator (grouped-map floor applied) over the gap-fill
-    output."""
+    trend_strength operator over the gap-fill output."""
     from hastl_spark.operators.trend import trend_strength
 
     gap = q_stl_gapfill_1h(spark, sf_dir)
-    return trend_strength(gap, key_col="event_type", order_col="bucket",
-                          n_keys=5)
+    return trend_strength(gap, key_col="event_type", order_col="bucket")
 
 
 def q_asof_enrich(spark, sf_dir):

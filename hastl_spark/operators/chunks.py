@@ -23,8 +23,7 @@ CHUNK_SCHEMA = (
 
 def gorilla_chunks(tier_df: DataFrame, value_col: str,
                    max_points_per_chunk: int = 65536,
-                   chunk_seconds: int | None = None,
-                   n_keys: int | None = None) -> DataFrame:
+                   chunk_seconds: int | None = None) -> DataFrame:
     """tier_df(source, bucket, <value_col>) -> chunk table.
 
     Two chunking disciplines:
@@ -81,14 +80,13 @@ def gorilla_chunks(tier_df: DataFrame, value_col: str,
             })
         return pd.DataFrame(rows)
 
-    # pin grouped-map parallelism (see gapfill.py _grouped_map_partitions:
-    # AQE would coalesce the small tier table into ~1 task, and a partition
-    # count near the core count straggles on key-hash collisions)
+    # pin grouped-map parallelism (see gapfill._grouped_map_partitions):
+    # AQE would coalesce the small tier table into ~1 task otherwise
     from pyspark.sql import functions as F
 
     from .gapfill import _grouped_map_partitions
 
-    tier_df = tier_df.repartition(_grouped_map_partitions(tier_df, n_keys),
+    tier_df = tier_df.repartition(_grouped_map_partitions(tier_df),
                                   F.col("source"))
     return tier_df.groupBy("source").applyInPandas(fn, CHUNK_SCHEMA)
 

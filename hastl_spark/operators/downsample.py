@@ -17,8 +17,8 @@ variants:
   SQL-portable twin (same convention as minhash_pairs/minhash_portable).
 
 Both partition by key only (each key's series is one group — tier series
-are small relative to partitions; the grouped-map balance floor used by
-the STL stage applies if keys are few).
+are small relative to partitions); ``lttb``'s exchange is sized by the
+grouped-map rule the STL stage uses (``gapfill._grouped_map_partitions``).
 """
 
 from __future__ import annotations

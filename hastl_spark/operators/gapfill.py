@@ -31,12 +31,12 @@ default remains the globally reference-exact path.
 
 Parallelism: the rolled-up input is small in bytes, so both paths pin the
 grouped map's partition count (AQE would otherwise coalesce it into one or
-two tasks). The unchunked path uses ``_grouped_map_partitions`` (keyed by
-source; 256 when the caller passes no key count). The chunked path
-collects its per-key bounds first (one job, one row per key), counts the
-(key, chunk) groups that will run, and plans ``max(2 x cores, groups)``
-partitions — an incremental refresh of a few chunks runs a few Python
-tasks, not 256 mostly empty ones.
+two tasks). The unchunked path plans ``_grouped_map_partitions`` (2 x
+cores), like every other grouped-map operator. The chunked path collects
+its per-key bounds first (one job, one row per key), counts the (key,
+chunk) groups that will run, and plans the larger of that rule and the
+group count — an incremental refresh of a few chunks runs a few Python
+tasks, a long backfill one task per group.
 """
 
 from __future__ import annotations
@@ -106,7 +106,6 @@ def stl_gapfill(
     chunk_buckets: int | None = None,
     halo_buckets: int | None = None,
     only_chunks: list[int] | None = None,
-    n_keys: int | None = None,
     **extra_params,
 ) -> DataFrame:
     """rollup(source, bucket, cnt, value_col) -> densified + decomposed series.
@@ -169,32 +168,27 @@ def stl_gapfill(
     # exchange — no extra shuffle) and scales with the session's cores.
     import pyspark.sql.functions as F
 
-    rollup = rollup.repartition(_grouped_map_partitions(rollup, n_keys),
+    rollup = rollup.repartition(_grouped_map_partitions(rollup),
                                 F.col(key_col))
     return rollup.groupBy(key_col).applyInPandas(fn, schema)
 
 
-def _grouped_map_partitions(df: DataFrame, n_keys: int | None = None) -> int:
-    """Partition count for grouped-map stages keyed by a column of unknown
-    spread: cores x 2 with a FLOOR well above the group-key count. With few
-    distinct keys and partitions ~ cores, hash collisions put 3-4x more
-    keys in some partitions than others and the stage wall is that
-    straggler. On a 32-core host this was measured as the scaling killer
-    at local[2] -> local[8] (efficiency 0.55 for gap-fill, 0.34 for chunk
-    encode); partitions >= 4x keys dilute collisions to ~one key per
-    partition.
+def _grouped_map_partitions(df: DataFrame) -> int:
+    """Partition count for the explicit exchange in front of a grouped map:
+    2 x the session's cores. The exchange itself is what matters — the
+    grouped inputs are small in bytes, and without it AQE coalesces them
+    into one or two tasks and serializes the Python calls.
 
-    When the caller knows the key cardinality (``n_keys``), the floor is
-    4x that. Re-measured on a 4-vCPU host (local[4], 4 sources x 7 days of
-    minutes, unchunked gap-fill): 8 or 16 partitions ran the stage in
-    0.77 s, the 256 floor in 1.44 s — empty Python tasks, not collisions,
-    dominate at that size. Unknown cardinality still keeps 256: those
-    callers (contract queries, downsample, packing) may group hundreds of
-    keys, where ~cores partitions would straggle. The chunked gap-fill does
-    not use this: it counts its (key, chunk) groups exactly."""
-    dp2 = df.sparkSession.sparkContext.defaultParallelism * 2
-    floor = 256 if n_keys is None else min(256, 4 * int(n_keys))
-    return max(dp2, floor)
+    Measured on a 4-vCPU host (local[4]), this rule against a fixed floor
+    of 256 partitions (4x the key count when a caller passed one): the
+    ``full_build`` benchmark's median operation 20.8 -> 18.6 s (packing
+    1.11M -> 1.85M tok/s), ``daily_refresh`` 12.8 -> 11.0 s, and at sf0.1
+    gorilla_roundtrip_1h 3.05 -> 1.57 s, packs_summary 1.91 -> 0.84 s. Each
+    empty task still pays a Python worker round trip; at these sizes that,
+    not hash collisions between a few keys, sets the stage wall. The
+    chunked gap-fill takes the larger of this and its (key, chunk) group
+    count."""
+    return 2 * df.sparkSession.sparkContext.defaultParallelism
 
 
 def _stl_gapfill_chunked(rollup: DataFrame, value_col: str, bucket_seconds: int,
@@ -319,8 +313,8 @@ def _stl_gapfill_chunked(rollup: DataFrame, value_col: str, bucket_seconds: int,
         })
 
     schema = GAPFILL_SCHEMA.replace("source string", f"{key_col} string")
-    # one partition per group, floored at 2x cores: a refresh that runs a
-    # dozen groups schedules a dozen Python tasks, not 256 mostly empty ones
-    n_part = max(2 * spark.sparkContext.defaultParallelism, n_groups)
+    # one partition per group, floored at the grouped-map rule: a refresh
+    # that runs a dozen groups schedules a dozen Python tasks
+    n_part = max(_grouped_map_partitions(df), n_groups)
     df = df.repartition(n_part, F.col(key_col), F.col("_chunk"))
     return df.groupBy(key_col, "_chunk").applyInPandas(fn, schema)

@@ -19,8 +19,7 @@ from ..kernel import loess_fit
 
 def loess_smooth(series: DataFrame, q: int, degree: int = 1,
                  jump: int | None = None, key_col: str = "source",
-                 order_col: str = "bucket", value_col: str = "y",
-                 n_keys: int | None = None) -> DataFrame:
+                 order_col: str = "bucket", value_col: str = "y") -> DataFrame:
     """series(key, order, value) -> (key, order, value, smoothed).
 
     NaN/null values are gaps: the smoothed curve is defined at every row
@@ -39,12 +38,12 @@ def loess_smooth(series: DataFrame, q: int, degree: int = 1,
             "smoothed": np.asarray(out, dtype=np.float64),
         })
 
-    # grouped-map partition floor (see gapfill._grouped_map_partitions):
+    # explicit grouped-map exchange (see gapfill._grouped_map_partitions):
     # AQE would coalesce the tiny series frame into ~1 task otherwise
     from pyspark.sql import functions as F
 
     from .gapfill import _grouped_map_partitions
 
-    series = series.repartition(_grouped_map_partitions(series, n_keys),
+    series = series.repartition(_grouped_map_partitions(series),
                                 F.col(key_col))
     return series.groupBy(key_col).applyInPandas(fn, schema)

@@ -83,12 +83,11 @@ def pack_sequences(df: DataFrame, budget: int, cost_col: str = "n_chars",
     )
     w_local = (Window.partitionBy("source", "_shard").orderBy("_id")
                .rowsBetween(Window.unboundedPreceding, 0))
-    # explicit floor on the window exchange: (source, _shard) cardinality is
-    # ~rows/shard_size + n_sources — small enough that hashing it into
-    # partitions ~ cores leaves collision stragglers carrying 2-4x the
-    # payload (the profiled round-3 scaling killer, gapfill.py's
-    # _grouped_map_partitions rationale). The window's required clustering
-    # is satisfied by this exchange, so no second shuffle is added.
+    # explicit window exchange sized by the grouped-map rule
+    # (gapfill._grouped_map_partitions): the (source, _shard) frame is
+    # small, and AQE would otherwise coalesce it into one or two tasks. The
+    # window's required clustering is satisfied by this exchange, so no
+    # second shuffle is added.
     from .gapfill import _grouped_map_partitions
 
     local = (d.repartition(_grouped_map_partitions(d), "source", "_shard")

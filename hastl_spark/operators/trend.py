@@ -3,9 +3,9 @@ the engine twin of the reference's summary entries (stl.fut:481-500:
 ``trend_magnitude`` = OLS slope of the trend component, ``seasonal_amplitude``
 = max-min of the seasonal component).
 
-One Arrow grouped-map task per series key, with the grouped-map partition
-floor applied (see gapfill._grouped_map_partitions): without it, AQE
-coalesces the tiny decomposition frame into ~1 task and serializes keys.
+One Arrow grouped-map call per series key, behind an explicit exchange of
+``gapfill._grouped_map_partitions`` partitions: without it, AQE coalesces
+the tiny decomposition frame into ~1 task and serializes keys.
 """
 
 from __future__ import annotations
@@ -20,8 +20,7 @@ from .gapfill import _grouped_map_partitions
 
 
 def trend_strength(decomp: DataFrame, key_col: str = "source",
-                   order_col: str = "bucket",
-                   n_keys: int | None = None) -> DataFrame:
+                   order_col: str = "bucket") -> DataFrame:
     """decomp(key, order, trend, seasonal, ...) ->
     (key, trend_magnitude, seasonal_amplitude), one row per key."""
     def fn(key, pdf):
@@ -35,7 +34,7 @@ def trend_strength(decomp: DataFrame, key_col: str = "source",
         })
 
     decomp = decomp.select(key_col, order_col, "trend", "seasonal")
-    decomp = decomp.repartition(_grouped_map_partitions(decomp, n_keys),
+    decomp = decomp.repartition(_grouped_map_partitions(decomp),
                                 F.col(key_col))
     return decomp.groupBy(key_col).applyInPandas(
         fn, f"{key_col} string, trend_magnitude double, "

@@ -18,6 +18,7 @@ import argparse
 import datetime
 import json
 import os
+import threading
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -74,16 +75,15 @@ def run_pipeline(
     stl_kwargs: dict | None = None,
     do_gorilla: bool = True,
     check_invariant: bool = True,
-    overlap: bool = True,
     incremental_gapfill: bool = False,
     chunk_seconds: dict | None = None,
     profile_stages: bool = False,
 ) -> dict:
-    """Full pipeline run. ``overlap=True`` runs the two independent
-    post-1m branches — STL gap-fill and the 1h/1d tier cascade — on
-    concurrent driver threads (Spark schedules their jobs FAIRly across the
-    executor): the cascade's merge latency hides under the STL compute,
-    removing a serial driver segment that Amdahl-caps scaling efficiency.
+    """Full pipeline run. The two independent post-1m branches — STL
+    gap-fill and the 1h/1d tier cascade — run on concurrent driver threads
+    (Spark schedules their jobs FAIRly across the executor): the cascade's
+    merge latency hides under the STL compute, removing a serial driver
+    segment that Amdahl-caps scaling efficiency.
 
     ``incremental_gapfill=True`` (requires ``stl_kwargs['chunk_buckets']``)
     recomputes only the gap-fill chunks whose halo-extended window
@@ -98,6 +98,11 @@ def run_pipeline(
     removing the last O(full-history) cost per incremental run. Default
     (None) keeps the densest row-count chunking with wholesale partition
     replacement."""
+    # validate before any table write: a first run under a bad config would
+    # otherwise merge a full unchunked gap-fill and fail only on the next
+    if incremental_gapfill and not (stl_kwargs or {}).get("chunk_buckets"):
+        raise ValueError("incremental_gapfill requires "
+                         "stl_kwargs['chunk_buckets']")
     os.makedirs(out_dir, exist_ok=True)
     metrics: dict = {}
     stage_walls: dict = {}
@@ -157,15 +162,6 @@ def run_pipeline(
     metrics["tier_1m"] = rec
     t0 = _mark("merge_1m", t0)
     days = sorted({p.split(PART_SEP)[1] for p in metrics["tier_1m"]["partitions"]})
-    # source cardinality sizes the grouped-map partition floors (4x keys)
-    # in unchunked gap-fill and chunk encode instead of the blind 256 worst
-    # case. It must come from the table MANIFEST's full partition set, not
-    # this merge's lineage: the frames those floors size are FULL-TABLE
-    # reads, and an incremental run touching a subset of sources would
-    # otherwise shrink the floor to min(256, 4*touched) and reintroduce the
-    # hash-collision straggler the floor exists to prevent (round-4 ADVICE).
-    n_sources = len({p.split(PART_SEP)[0]
-                     for p in t_1m.partition_values()}) or None
     t_gap = KeyedTable(os.path.join(out_dir, "gapfill_1m"), ["source", "bucket"],
                        part_spec=DAY_SPEC)
     gap_for_chunks: dict = {}
@@ -177,16 +173,9 @@ def run_pipeline(
         # days' files. Exactness caveat: chunked STL matches the global fit
         # exactly on dense grids only (see operators/gapfill.py docstring).
         kw = dict(stl_kwargs or {})
-        if not kw.get("chunk_buckets"):
-            # the unchunked grouped map is keyed by source alone; the
-            # chunked path sizes itself from its (source x chunk) groups
-            kw.setdefault("n_keys", n_sources)
         if incremental_gapfill and t_gap.exists():
             from hastl_spark.operators.gapfill import (default_halo_buckets,
                                                        touched_chunk_ids)
-            if not kw.get("chunk_buckets"):
-                raise ValueError("incremental_gapfill requires "
-                                 "stl_kwargs['chunk_buckets']")
             bsec = kw.get("bucket_seconds", 60)
             # 'is None', not 'or': an explicit halo_buckets=0 must make the
             # touched-chunk set match the halo stl_gapfill actually applies
@@ -261,29 +250,21 @@ def run_pipeline(
     # merges) are independent given cur_1m: overlapping them hides the
     # cascade's fixed merge latency under the STL work instead of adding it
     # serially (measured as the dominant Amdahl term at small core counts).
-    if overlap:
-        import threading
+    errs: list[BaseException] = []
 
-        errs: list[BaseException] = []
+    def _run(fn):
+        try:
+            fn()
+        except BaseException as e:  # surface thread failures to caller
+            errs.append(e)
 
-        def _run(fn):
-            try:
-                fn()
-            except BaseException as e:  # surface thread failures to caller
-                errs.append(e)
-
-        th = threading.Thread(target=_run, args=(branch_cascade,), daemon=True)
-        th.start()
-        _run(branch_gapfill)
-        th.join()
-        if errs:
-            raise errs[0]
-        t0 = _mark("gapfill+cascade", t0)
-    else:
-        branch_gapfill()
-        t0 = _mark("gapfill", t0)
-        branch_cascade()
-        t0 = _mark("cascade", t0)
+    th = threading.Thread(target=_run, args=(branch_cascade,), daemon=True)
+    th.start()
+    _run(branch_gapfill)
+    th.join()
+    if errs:
+        raise errs[0]
+    t0 = _mark("gapfill+cascade", t0)
 
     if do_gorilla:
         # ONE unified chunk table keyed (source, tier, chunk_start): the four
@@ -330,15 +311,10 @@ def run_pipeline(
         }
         parts = []
         n_windows = {}
-        # the chunk encoders' grouped-map key is `source` (cardinality from
-        # the merge lineage, hoisted above): floor = 4x keys instead of the
-        # blind 256 — 4 tiers x 256 mostly-empty tasks is pure scheduling
-        # overhead on small source counts
         for tier, (tdf, vcol) in tier_srcs.items():
-            kw = {"n_keys": n_sources}
+            W = None
             if anchored:
                 W = int(chunk_seconds[tier])
-                kw["chunk_seconds"] = W
                 if inc_chunks:
                     # re-encode ONLY the time windows intersecting this
                     # run's touched days (whole windows: the encode needs
@@ -360,7 +336,7 @@ def run_pipeline(
                     tdf = tdf.filter(
                         (F.unix_timestamp("bucket") / W).cast("long")
                         .isin(wins))
-            parts.append(gorilla_chunks(tdf, vcol, **kw)
+            parts.append(gorilla_chunks(tdf, vcol, chunk_seconds=W)
                          .withColumn("tier", F.lit(tier)))
         chunks = parts[0]
         for p in parts[1:]:
@@ -439,8 +415,6 @@ def main(argv=None):
     ap.add_argument("--since-bucket", type=int, default=None,
                     help="incremental: only process bucket index >= N")
     ap.add_argument("--no-gorilla", action="store_true")
-    ap.add_argument("--no-overlap", action="store_true",
-                    help="disable concurrent gapfill/cascade branches")
     ap.add_argument("--incremental-gapfill", action="store_true",
                     help="recompute only gap-fill chunks touched by this "
                          "run's days (requires --chunk-buckets)")
@@ -470,18 +444,10 @@ def main(argv=None):
 
     stl_kwargs = ({"chunk_buckets": args.chunk_buckets}
                   if args.chunk_buckets else None)
-    if args.incremental_gapfill and not args.chunk_buckets:
-        # validate UP FRONT: the run_pipeline check only fires once the
-        # gapfill table exists, i.e. the SECOND run — by then the first run
-        # has already merged an unchunked full gapfill under the bad config
-        raise SystemExit("--incremental-gapfill requires --chunk-buckets "
-                         "(incremental recomputation is defined on the "
-                         "chunked grid)")
     if args.repeat == 1 and args.warmup == 0:
         metrics = run_pipeline(spark, seqs, args.out, n_salts=args.n_salts,
                                do_gorilla=not args.no_gorilla,
                                stl_kwargs=stl_kwargs,
-                               overlap=not args.no_overlap,
                                incremental_gapfill=args.incremental_gapfill,
                                chunk_seconds=(DEFAULT_CHUNK_SECONDS
                                               if args.anchored_chunks else None),
@@ -502,7 +468,6 @@ def main(argv=None):
         metrics = run_pipeline(spark, seqs, out, n_salts=args.n_salts,
                                do_gorilla=not args.no_gorilla,
                                stl_kwargs=stl_kwargs,
-                               overlap=not args.no_overlap,
                                incremental_gapfill=args.incremental_gapfill,
                                chunk_seconds=(DEFAULT_CHUNK_SECONDS
                                               if args.anchored_chunks else None),

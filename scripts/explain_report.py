@@ -90,34 +90,35 @@ def main():
     checks.append(("gap-fill uses Arrow grouped-map (FlatMapGroupsInPandas)",
                    "FlatMapGroupsInPandas" in p))
 
-    # 4b. grouped-map balance floor: the exchange feeding the pandas UDF
-    # must hash into >= 256 partitions (partitions ~ cores straggle on
-    # key-hash collisions with few keys — measured scaling killer). Parse
-    # the actual partition count: on hosts where defaultParallelism*2 > 256
-    # the exchange legitimately hashes wider than the literal floor.
+    # 4b. grouped-map partition rule: the pandas UDF must sit behind an
+    # EXPLICIT repartition (REPARTITION_BY_NUM — AQE cannot coalesce it
+    # into one or two tasks) whose width is _grouped_map_partitions(df).
+    # Upstream aggregation exchanges legitimately use
+    # spark.sql.shuffle.partitions, so only the explicit one is parsed.
     import re
 
-    # only the EXPLICIT repartition (REPARTITION_BY_NUM) is the floor
-    # exchange; upstream aggregation exchanges legitimately use
-    # spark.sql.shuffle.partitions
-    _floor_re = (r"hashpartitioning\(source[^)]*,\s*(\d+)\),\s*"
-                 r"REPARTITION_BY_NUM")
-    nparts = [int(m) for m in re.findall(_floor_re, p)]
-    checks.append(("gap-fill exchange uses the 256-partition balance floor",
-                   bool(nparts) and min(nparts) >= 256))
+    from hastl_spark.operators.gapfill import _grouped_map_partitions
 
-    # 4b2. trend_strength operator: same floor on ITS grouped-map exchange
+    _gm_re = (r"hashpartitioning\(source[^)]*,\s*(\d+)\),\s*"
+              r"REPARTITION_BY_NUM")
+    gm_width = _grouped_map_partitions(r1m)
+
+    def _gm_rule(plan):
+        widths = {int(m) for m in re.findall(_gm_re, plan)}
+        return widths == {gm_width}
+
+    checks.append(("gap-fill exchange is explicit, sized by the grouped-map "
+                   "rule", _gm_rule(p)))
+
+    # 4b2. trend_strength operator: same rule on ITS grouped-map exchange
     # (round-3 review: the entry file had a bare applyInPandas here)
     from hastl_spark.operators.trend import trend_strength
 
     tp = plan_of(trend_strength(g.select("source", "bucket", "trend",
-                                         "seasonal"), n_keys=8))
-    sections["trend_strength (grouped-map floor)"] = tp
-    tparts = [int(m) for m in re.findall(_floor_re, tp)]
-    checks.append(("trend_strength exchange respects the balance floor "
-                   "(>= 4x keys and >= 2x cores)",
-                   bool(tparts) and min(tparts) >= max(
-                       32, spark.sparkContext.defaultParallelism * 2)))
+                                         "seasonal")))
+    sections["trend_strength (grouped-map exchange)"] = tp
+    checks.append(("trend_strength exchange is explicit, sized by the "
+                   "grouped-map rule", _gm_rule(tp)))
 
     # 4c. portable ANN: signature via ONE Arrow-batched UDF, band keys as
     # codegen bit ops (not n_bits interpreted Catalyst folds)
@@ -179,9 +180,8 @@ def main():
                    "BroadcastHashJoin" in p or "BroadcastExchange" in p))
     checks.append(("packing cumsum window partitions by (source, _shard), "
                    "never source alone", local_sharded and not whole_source))
-    pparts = [int(m) for m in re.findall(_floor_re, p)]
-    checks.append(("packing window exchange respects the balance floor",
-                   bool(pparts) and min(pparts) >= 256))
+    checks.append(("packing window exchange is explicit, sized by the "
+                   "grouped-map rule", _gm_rule(p)))
 
     # 10. as-of join: the union-merge plan must contain NO join operator at
     # all (the naive formulation is a theta-join / BroadcastNestedLoop) —

@@ -52,6 +52,18 @@ def test_clip_touched_chunks():
     assert groups == 3  # s1: two days, s2: one
 
 
+def test_incremental_without_chunks_fails_before_any_write(spark, tmp_path):
+    # caught on the FIRST run, not once a full unchunked gap-fill exists
+    seqs = generate_sequences(spark, n_sources=1, n_buckets=1440,
+                              base_rate=1.0, tok_lo=4, tok_hi=8,
+                              with_tokens=True)
+    out = tmp_path / "inc"
+    with pytest.raises(ValueError, match="chunk_buckets"):
+        run_pipeline(spark, seqs, str(out), incremental_gapfill=True,
+                     stl_kwargs=None)
+    assert list(out.rglob("_manifest.json")) == []
+
+
 @pytest.mark.slow
 def test_refresh_records_clipped_chunks_and_groups(spark, tmp_path):
     """A one-day refresh at the series end: the halo (q_s=7 -> 1250
