@@ -2,8 +2,10 @@
 
 One ``applyInPandas`` per (source): sort by bucket inside the group (cheaper
 than a global sort — ordering is only needed within a chunk), encode with the
-vectorized codec, emit one row per chunk with stats. Chunk size bounds both
-UDF memory and point-lookup read amplification.
+vectorized codec, emit one row per time-anchored window with stats. The
+window span bounds both UDF memory and point-lookup read amplification, and
+because windows are anchored at the epoch, a chunk's key never moves when
+earlier data arrives.
 """
 
 from __future__ import annotations
@@ -22,23 +24,19 @@ CHUNK_SCHEMA = (
 
 
 def gorilla_chunks(tier_df: DataFrame, value_col: str,
-                   max_points_per_chunk: int = 65536,
-                   chunk_seconds: int | None = None) -> DataFrame:
+                   chunk_seconds: int = 7 * 86400) -> DataFrame:
     """tier_df(source, bucket, <value_col>) -> chunk table.
 
-    Two chunking disciplines:
-
-    * ``chunk_seconds=None`` (default): row-count chunks of up to
-      ``max_points_per_chunk`` points from the sorted series — densest
-      packing, but a backfill SHIFTS every later chunk boundary, so the
-      chunk set must be regenerated (and partitions replaced) wholesale.
-    * ``chunk_seconds=N``: TIME-ANCHORED chunks — one chunk per
-      ``(source, floor(epoch/N))`` window (TimescaleDB-style hypertable
-      chunking). Boundaries are stable under backfill, so an incremental
-      run can re-encode ONLY the windows its merge touched and keyed-upsert
-      them; ``chunk_start`` is pinned to the window start's encoded first
-      point. Points per chunk are bounded by N / tier-bucket-seconds.
+    TIME-ANCHORED chunks: one chunk per ``(source, floor(epoch /
+    chunk_seconds))`` window (TimescaleDB-style hypertable chunking).
+    Boundaries are stable under backfill, so an incremental run can
+    re-encode ONLY the windows its merge touched and keyed-upsert them;
+    ``chunk_start`` is the window start, ``chunk_end`` the last encoded
+    point. Points per chunk are bounded by chunk_seconds / tier-bucket
+    seconds.
     """
+    if chunk_seconds <= 0:
+        raise ValueError(f"chunk_seconds must be positive, got {chunk_seconds}")
 
     def fn(key, pdf):
         source = key[0]
@@ -46,24 +44,11 @@ def gorilla_chunks(tier_df: DataFrame, value_col: str,
         ts = (pdf["bucket"].astype("int64") // 10**9).to_numpy()
         vals = pdf[value_col].astype("float64").to_numpy()
         rows = []
-        if chunk_seconds is not None:
-            bounds = np.flatnonzero(np.diff(ts // chunk_seconds)) + 1
-            pieces = np.split(np.arange(len(ts)), bounds)
-        else:
-            pieces = [np.arange(s, min(s + max_points_per_chunk, len(ts)))
-                      for s in range(0, len(ts), max_points_per_chunk)]
-        for idx in pieces:
-            if len(idx) == 0:
-                continue
-            t = ts[idx[0]:idx[-1] + 1]
-            v = vals[idx[0]:idx[-1] + 1]
+        bounds = np.flatnonzero(np.diff(ts // chunk_seconds)) + 1
+        for t, v in zip(np.split(ts, bounds), np.split(vals, bounds)):
             blob = encode(t, v)
             st = chunk_stats(v, blob)
-            # time-anchored chunks key on the WINDOW start (stable under
-            # backfill — a keyed upsert replaces the window's chunk);
-            # row-count chunks key on the first encoded point
-            start_s = (int(t[0]) // chunk_seconds * chunk_seconds
-                       if chunk_seconds is not None else int(t[0]))
+            start_s = int(t[0]) // chunk_seconds * chunk_seconds
             rows.append({
                 "source": source,
                 "chunk_start": pd.Timestamp(start_s, unit="s"),
@@ -108,15 +93,3 @@ def decode_chunks_df(chunks: DataFrame) -> DataFrame:
 
     return chunks.select("source", "blob").mapInPandas(
         fn, "source string, ts long, value double")
-
-
-def decode_chunks(chunks_pdf: pd.DataFrame) -> pd.DataFrame:
-    """Verification read path: chunk rows -> (source, ts, value) points."""
-    from .gorilla import decode
-
-    out = []
-    for _, r in chunks_pdf.iterrows():
-        ts, vals = decode(bytes(r["blob"]))
-        out.append(pd.DataFrame({"source": r["source"], "ts": ts, "value": vals}))
-    return (pd.concat(out, ignore_index=True) if out
-            else pd.DataFrame(columns=["source", "ts", "value"]))

@@ -29,6 +29,11 @@ count that no windowed computation can reproduce. The chunked path is
 therefore "reference STL applied to each chunk window"; the unchunked
 default remains the globally reference-exact path.
 
+One window body: both paths hand each group to ``_decompose`` and differ
+only in the grid (the key's full range, or a chunk plus its halo) and the
+slice of it returned. Densification, the duplicate-bucket rule (the first
+row per bucket wins) and the kernel call are therefore one code path.
+
 Parallelism: the rolled-up input is small in bytes, so both paths pin the
 grouped map's partition count (AQE would otherwise coalesce it into one or
 two tasks). The unchunked path plans ``_grouped_map_partitions`` (2 x
@@ -40,6 +45,8 @@ tasks, a long backfill one task per group.
 """
 
 from __future__ import annotations
+
+import inspect
 
 import numpy as np
 import pandas as pd
@@ -54,7 +61,7 @@ GAPFILL_SCHEMA = (
 )
 
 
-def default_halo_buckets(n_p: int = 52, **params) -> int:
+def default_halo_buckets(n_p: int, **params) -> int:
     """Halo width (in buckets) covering the full influence radius of the
     given STL parameterization — what a chunked or incremental
     recomputation must include around any touched range.
@@ -68,9 +75,6 @@ def default_halo_buckets(n_p: int = 52, **params) -> int:
     single-window halo (max(q_s*n_p, q_t, q_l)) left ~3e-5 errors within
     ~q_s*n_p/2 of series edges — measured bit-exact only once the halo
     covers the compounded radius (tests/test_gapfill_chunked.py)."""
-    # default q_s mirrors stl_gapfill's signature, so a caller that relies
-    # on the operator defaults derives the matching halo
-    params.setdefault("q_s", 19)
     p0 = canonicalize_stl_params(10 ** 9, n_p, **params)
     passes = max(1, p0.n_inner) * max(1, p0.n_outer)
     per_pass = p0.q_s * n_p + p0.q_t + p0.q_l + 2 * n_p + 3
@@ -128,37 +132,10 @@ def stl_gapfill(
                          "recomputation is defined on the chunked grid)")
 
     def fn(key, pdf):
-        source = key[0]
-        pdf = pdf.sort_values("bucket")
-        # duplicate buckets (shouldn't occur in rollup output, but) keep
-        # the first row — SAME policy as the chunked path, which dedups
-        # via index.duplicated(); reindex on a duplicated DatetimeIndex
-        # would raise here while the chunked path silently answers
-        pdf = pdf[~pdf["bucket"].duplicated()]
-        idx = pd.DatetimeIndex(pdf["bucket"])
-        grid = pd.date_range(idx.min(), idx.max(), freq=freq)
-        s = pd.Series(pdf[value_col].astype("float64").values, index=idx)
-        s = s.reindex(grid)
-        cnt = pd.Series(pdf["cnt"].values, index=idx).reindex(grid).fillna(0).astype("int64")
-        y = s.values  # float64, NaN at gaps
-        n = len(y)
-        if n < 2 * n_p:
-            # series too short for a seasonal fit: pass through, no decomposition
-            nanv = np.full(n, np.nan)
-            return pd.DataFrame({
-                key_col: source, "bucket": grid, "y": y,
-                "seasonal": nanv, "trend": nanv, "remainder": nanv,
-                "gapfilled": y, "cnt": cnt.values,
-            })
-        p = canonicalize_stl_params(n, n_p, **params)
-        S, T, R = stl_filt(y[None, :].astype(np.float32), p)
-        S, T, R = S[0].astype(np.float64), T[0].astype(np.float64), R[0].astype(np.float64)
-        gapfilled = np.where(np.isnan(y), S + T, y)
-        return pd.DataFrame({
-            key_col: source, "bucket": grid, "y": y,
-            "seasonal": S, "trend": T, "remainder": R,
-            "gapfilled": gapfilled, "cnt": cnt.values,
-        })
+        grid = pd.date_range(pdf["bucket"].min(), pdf["bucket"].max(),
+                             freq=freq)
+        return _decompose(pdf, grid, slice(None), value_col, n_p, params,
+                          key_col, key[0])
 
     schema = GAPFILL_SCHEMA.replace("source string", f"{key_col} string")
     # Pin the grouped-map parallelism: the rolled-up input is small in bytes,
@@ -171,6 +148,54 @@ def stl_gapfill(
     rollup = rollup.repartition(_grouped_map_partitions(rollup),
                                 F.col(key_col))
     return rollup.groupBy(key_col).applyInPandas(fn, schema)
+
+
+def gapfill_halo_buckets(**stl_kwargs) -> int:
+    """The halo (in buckets) ``stl_gapfill(rollup, **stl_kwargs)`` puts
+    around each chunk: ``halo_buckets`` when given (an explicit 0 too),
+    else ``default_halo_buckets`` of the STL parameters, stl_gapfill's own
+    defaults standing in for those the caller left out."""
+    bound = inspect.signature(stl_gapfill).bind(None, **stl_kwargs)
+    bound.apply_defaults()
+    args = {**bound.arguments, **bound.arguments["extra_params"]}
+    if args["halo_buckets"] is not None:
+        return int(args["halo_buckets"])
+    stl_names = set(inspect.signature(canonicalize_stl_params).parameters)
+    return default_halo_buckets(
+        args["n_p"], **{k: v for k, v in args.items()
+                        if k in stl_names - {"n", "n_p"}})
+
+
+def _decompose(pdf: pd.DataFrame, grid: pd.DatetimeIndex, interior: slice,
+               value_col: str, n_p: int, params: dict, key_col: str,
+               source) -> pd.DataFrame:
+    """One STL window, shared by both gap-fill paths: densify a group's
+    rows onto ``grid`` (NaN at gaps; the first row per bucket wins, so a
+    duplicated bucket never reaches the reindex), decompose with one
+    kernel call and return the ``interior`` rows. A window shorter than
+    two periods passes through undecomposed."""
+    idx = pd.DatetimeIndex(pdf["bucket"])
+    first = ~idx.duplicated()
+    y = (pd.Series(pdf[value_col].astype("float64").values, index=idx)[first]
+         .reindex(grid).values)  # float64, NaN at gaps
+    cnt = (pd.Series(pdf["cnt"].values, index=idx)[first]
+           .reindex(grid).fillna(0).astype("int64").values)
+    n = len(y)
+    if n < 2 * n_p:
+        S = T = R = np.full(n, np.nan)
+        gapfilled = y
+    else:
+        p = canonicalize_stl_params(n, n_p, **params)
+        S, T, R = stl_filt(y[None, :].astype(np.float32), p)
+        S, T, R = (S[0].astype(np.float64), T[0].astype(np.float64),
+                   R[0].astype(np.float64))
+        gapfilled = np.where(np.isnan(y), S + T, y)
+    return pd.DataFrame({
+        key_col: source, "bucket": grid[interior], "y": y[interior],
+        "seasonal": S[interior], "trend": T[interior],
+        "remainder": R[interior], "gapfilled": gapfilled[interior],
+        "cnt": cnt[interior],
+    })
 
 
 def _grouped_map_partitions(df: DataFrame) -> int:
@@ -221,14 +246,8 @@ def _stl_gapfill_chunked(rollup: DataFrame, value_col: str, bucket_seconds: int,
     """
     from pyspark.sql import functions as F
 
-    from ..kernel import canonicalize_stl_params
-
     C = int(chunk_buckets)
-    if halo_buckets is None:
-        # widest influence: seasonal window spans q_s points of a cycle
-        # subseries = q_s * n_p buckets; trend/lowpass span q_t / q_l
-        halo_buckets = default_halo_buckets(n_p, **params)
-    H = int(halo_buckets)
+    H = gapfill_halo_buckets(n_p=n_p, halo_buckets=halo_buckets, **params)
     if C < 2 * n_p:
         raise ValueError(f"chunk_buckets={C} must be >= 2*n_p={2 * n_p}")
     D = -(-H // C)  # neighbors per side a halo can span (ceil(H/C))
@@ -274,43 +293,17 @@ def _stl_gapfill_chunked(rollup: DataFrame, value_col: str, bucket_seconds: int,
         df = df.filter(F.col("_chunk").isin(sorted(only)))
 
     def fn(key, pdf):
-        source, k = key[0], int(key[1])
+        k = int(key[1])
         kp0 = int(pdf["_p0"].iloc[0])
         kp1 = int(pdf["_p1"].iloc[0])
         lo = max(k * C - H, kp0)
         hi = min((k + 1) * C - 1 + H, kp1)
         grid = pd.to_datetime(
             np.arange(lo, hi + 1) * bucket_seconds, unit="s")
-        idx = pd.DatetimeIndex(pdf["bucket"])
-        s = pd.Series(pdf[value_col].astype("float64").values, index=idx)
-        s = s[~s.index.duplicated()].reindex(grid)
-        cnt = (pd.Series(pdf["cnt"].values, index=idx)[lambda x: ~x.index.duplicated()]
-               .reindex(grid).fillna(0).astype("int64"))
-        y = s.values
-        n = len(y)
-        i_lo = max(k * C, kp0) - lo             # first interior offset
-        i_hi = min((k + 1) * C - 1, kp1) - lo   # last interior offset
-        interior = slice(i_lo, i_hi + 1)
-        if i_hi < i_lo:
-            return pd.DataFrame(columns=["__k", "bucket", "y", "seasonal",
-                                         "trend", "remainder", "gapfilled",
-                                         "cnt"]).rename(columns={"__k": key_col})
-        if n < 2 * n_p:
-            nanv = np.full(n, np.nan)
-            S = T = R = nanv
-            gapfilled = y
-        else:
-            pr = canonicalize_stl_params(n, n_p, **params)
-            S, T, R = stl_filt(y[None, :].astype(np.float32), pr)
-            S, T, R = (S[0].astype(np.float64), T[0].astype(np.float64),
-                       R[0].astype(np.float64))
-            gapfilled = np.where(np.isnan(y), S + T, y)
-        return pd.DataFrame({
-            key_col: source, "bucket": grid[interior], "y": y[interior],
-            "seasonal": S[interior], "trend": T[interior],
-            "remainder": R[interior], "gapfilled": gapfilled[interior],
-            "cnt": cnt.values[interior],
-        })
+        interior = slice(max(k * C, kp0) - lo,
+                         min((k + 1) * C - 1, kp1) - lo + 1)
+        return _decompose(pdf, grid, interior, value_col, n_p, params,
+                          key_col, key[0])
 
     schema = GAPFILL_SCHEMA.replace("source string", f"{key_col} string")
     # one partition per group, floored at the grouped-map rule: a refresh

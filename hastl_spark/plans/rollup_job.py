@@ -5,8 +5,9 @@
 Stages (SURVEY.md §3.4):
   sequences -> token-invariant check -> event-time derivation ->
   salted 1m rollup -> MERGE tier_1m -> STL gap-fill (applyInPandas) ->
-  MERGE gapfill_1m -> 1h/1d re-rollup -> MERGE -> Gorilla chunks per tier ->
-  MERGE chunk tables; lineage manifest per run; prints one JSON metrics line.
+  MERGE gapfill_1m -> 1h/1d re-rollup -> MERGE -> Gorilla chunks per tier
+  (epoch-anchored time windows, ``DEFAULT_CHUNK_SECONDS``) -> keyed MERGE of
+  the chunk table; lineage manifest per run; prints one JSON metrics line.
 
 Runs incrementally: pass ``--since-bucket N`` to restrict the raw scan to
 buckets >= N (Iceberg snapshot-diff stand-in); MERGE keeps prior rows.
@@ -76,7 +77,7 @@ def run_pipeline(
     do_gorilla: bool = True,
     check_invariant: bool = True,
     incremental_gapfill: bool = False,
-    chunk_seconds: dict | None = None,
+    chunk_seconds: dict = DEFAULT_CHUNK_SECONDS,
     profile_stages: bool = False,
 ) -> dict:
     """Full pipeline run. The two independent post-1m branches — STL
@@ -91,18 +92,24 @@ def run_pipeline(
     STL cost scales with the touched range, not the table's full history.
     The first run on an empty gapfill table computes everything.
 
-    ``chunk_seconds={tier: seconds}`` switches the Gorilla chunk tables to
-    TIME-ANCHORED windows (stable chunk keys under backfill) and a KEYED
-    merge; combined with ``incremental_gapfill=True`` the chunk stage then
-    re-encodes only the windows intersecting this run's touched days —
-    removing the last O(full-history) cost per incremental run. Default
-    (None) keeps the densest row-count chunking with wholesale partition
-    replacement."""
+    ``chunk_seconds={tier: seconds}`` sets the span of each tier's
+    TIME-ANCHORED Gorilla chunk windows (epoch-anchored, so chunk keys are
+    stable under backfill) and the chunk tables take a KEYED merge; with
+    ``incremental_gapfill=True`` the chunk stage re-encodes only the
+    windows intersecting this run's touched days — removing the last
+    O(full-history) cost per incremental run."""
     # validate before any table write: a first run under a bad config would
-    # otherwise merge a full unchunked gap-fill and fail only on the next
+    # otherwise merge a full unchunked gap-fill and fail only on the next,
+    # and a bad chunk span would fail only after every tier is published
     if incremental_gapfill and not (stl_kwargs or {}).get("chunk_buckets"):
         raise ValueError("incremental_gapfill requires "
                          "stl_kwargs['chunk_buckets']")
+    if not (isinstance(chunk_seconds, dict) and all(
+            isinstance(chunk_seconds.get(t), int) and chunk_seconds[t] > 0
+            for t in DEFAULT_CHUNK_SECONDS)):
+        raise ValueError("chunk_seconds must map each of "
+                         f"{sorted(DEFAULT_CHUNK_SECONDS)} to a positive "
+                         f"int of seconds, got {chunk_seconds!r}")
     os.makedirs(out_dir, exist_ok=True)
     metrics: dict = {}
     stage_walls: dict = {}
@@ -174,17 +181,12 @@ def run_pipeline(
         # exactly on dense grids only (see operators/gapfill.py docstring).
         kw = dict(stl_kwargs or {})
         if incremental_gapfill and t_gap.exists():
-            from hastl_spark.operators.gapfill import (default_halo_buckets,
+            from hastl_spark.operators.gapfill import (gapfill_halo_buckets,
                                                        touched_chunk_ids)
             bsec = kw.get("bucket_seconds", 60)
-            # 'is None', not 'or': an explicit halo_buckets=0 must make the
-            # touched-chunk set match the halo stl_gapfill actually applies
-            halo = kw.get("halo_buckets")
-            halo = halo if halo is not None else default_halo_buckets(
-                kw.get("n_p", 52),
-                **{k: v for k, v in kw.items()
-                   if k in ("q_s", "d_s", "jump_s", "jump_t", "jump_l",
-                            "n_inner", "n_outer", "q_t", "q_l", "d_t", "d_l")})
+            # the same halo stl_gapfill applies, so the touched-chunk set
+            # covers every chunk whose window reaches a touched day
+            halo = gapfill_halo_buckets(**kw)
             ranges = []
             for d in days:
                 lo_pos = _utc_seconds(d) // bsec
@@ -273,30 +275,25 @@ def run_pipeline(
         t_ch = KeyedTable(os.path.join(out_dir, "chunks"),
                           ["source", "tier", "chunk_start"],
                           part_spec=CHUNK_SPEC)
-        anchored = chunk_seconds is not None
-        # chunking-discipline guard (round-3 ADVICE): anchored and row-count
-        # runs produce DIFFERENT chunk_start keys under the same CHUNK_SPEC,
-        # so switching disciplines over existing history would leave stale
-        # overlapping chunks that duplicate points on decode. The discipline
-        # is recorded as a table property; on a switch we force a FULL
-        # re-encode published as an overwrite snapshot (stale partitions
-        # dropped), never an incremental keyed merge.
-        discipline = "anchored" if anchored else "rowcount"
+        # chunking guard: chunks are time-anchored windows, recorded as
+        # the table prop chunking="anchored". A table written under the
+        # retired row-count discipline (or before the prop existed) keys
+        # its chunks on their first point, so a keyed merge over it would
+        # leave stale overlapping chunks that duplicate points on decode:
+        # such a table gets a FULL re-encode published as an overwrite
+        # snapshot (stale partitions dropped), never a keyed merge. Same
+        # rule for the Gorilla codec version: decode() asserts one magic,
+        # so a merge must never mix GOR1-era rows with GOR2 rows.
+        discipline = "anchored"
         from hastl_spark.operators.gorilla import CODEC_VERSION
 
         prev_disc = t_ch.prop("chunking") if t_ch.exists() else None
         prev_codec = t_ch.prop("codec") if t_ch.exists() else None
-        # A PRE-EXISTING table with NO recorded discipline (written before
-        # the prop existed) must be treated as a potential mismatch too:
-        # assuming it matches would let an anchored+incremental run keyed-
-        # merge over legacy row-count chunks — exactly the stale-overlap
-        # corruption this guard prevents. Unknown discipline => full
-        # re-encode overwrite, which also stamps the prop going forward.
-        # Same rule for the Gorilla codec version: decode() asserts one
-        # magic, so a merge must never mix GOR1-era rows with GOR2 rows.
         migrate_chunks = t_ch.exists() and (prev_disc != discipline
                                             or prev_codec != CODEC_VERSION)
-        inc_chunks = (anchored and incremental_gapfill and t_ch.exists()
+        # a non-incremental run re-encodes every window, which also repairs
+        # windows left stale by an earlier do_gorilla=False run
+        inc_chunks = (incremental_gapfill and t_ch.exists()
                       and not migrate_chunks)
         gap_src = gap_for_chunks.get("df")
         if gap_src is None:
@@ -312,30 +309,28 @@ def run_pipeline(
         parts = []
         n_windows = {}
         for tier, (tdf, vcol) in tier_srcs.items():
-            W = None
-            if anchored:
-                W = int(chunk_seconds[tier])
-                if inc_chunks:
-                    # re-encode ONLY the time windows intersecting this
-                    # run's touched days (whole windows: the encode needs
-                    # every row of a touched window, not just touched days).
-                    # The gapfill tier's touched set comes from the
-                    # gap-fill MERGE's own partitions — its halo rewrites
-                    # days beyond the 1m merge's set
-                    tier_days = days
-                    if tier == "gapfill_1m":
-                        tier_days = sorted({
-                            p.split(PART_SEP)[1]
-                            for p in metrics["gapfill_1m"]["partitions"]})
-                    win_set: set[int] = set()
-                    for d in tier_days:
-                        d0 = _utc_seconds(d)
-                        win_set.update(range(d0 // W, (d0 + 86399) // W + 1))
-                    wins = sorted(win_set)
-                    n_windows[tier] = len(wins)
-                    tdf = tdf.filter(
-                        (F.unix_timestamp("bucket") / W).cast("long")
-                        .isin(wins))
+            W = chunk_seconds[tier]
+            if inc_chunks:
+                # re-encode ONLY the time windows intersecting this run's
+                # touched days (whole windows: the encode needs every row
+                # of a touched window, not just touched days). The gapfill
+                # tier's touched set comes from the gap-fill MERGE's own
+                # partitions — its halo rewrites days beyond the 1m
+                # merge's set
+                tier_days = days
+                if tier == "gapfill_1m":
+                    tier_days = sorted({
+                        p.split(PART_SEP)[1]
+                        for p in metrics["gapfill_1m"]["partitions"]})
+                win_set: set[int] = set()
+                for d in tier_days:
+                    d0 = _utc_seconds(d)
+                    win_set.update(range(d0 // W, (d0 + 86399) // W + 1))
+                wins = sorted(win_set)
+                n_windows[tier] = len(wins)
+                tdf = tdf.filter(
+                    (F.unix_timestamp("bucket") / W).cast("long")
+                    .isin(wins))
             parts.append(gorilla_chunks(tdf, vcol, chunk_seconds=W)
                          .withColumn("tier", F.lit(tier)))
         chunks = parts[0]
@@ -354,14 +349,10 @@ def run_pipeline(
             chunks = chunks.persist(StorageLevel.MEMORY_AND_DISK)
             metrics["n_chunks"] = chunks.count()
             t0 = _mark("chunks_encode", t0)
-        # row-count chunking: chunk sets are REGENERATED from the full tier
-        # each run, and a backfill can shift 65536-point chunk boundaries
-        # (new chunk_start keys overlapping stale rows) — so affected
-        # partitions are replaced wholesale. Time-anchored chunking: keys
-        # are stable, so a keyed upsert replaces exactly the re-encoded
-        # windows. Month sub-partitioning (by chunk_start) + the chunk_end
-        # watermark make retention a metadata-only drop of fully-aged
-        # partitions (plans/retention.py) either way.
+        # window keys are stable, so a keyed upsert replaces exactly the
+        # re-encoded windows. Month sub-partitioning (by chunk_start) + the
+        # chunk_end watermark make retention a metadata-only drop of
+        # fully-aged partitions (plans/retention.py).
         if inc_chunks:
             metrics["chunk_windows_recomputed"] = n_windows
         if migrate_chunks:
@@ -375,7 +366,6 @@ def run_pipeline(
         else:
             metrics["chunks"] = t_ch.merge_upsert(
                 spark, chunks, watermark_col="chunk_end",
-                replace_partitions=not anchored,
                 props={"chunking": discipline,
                        "codec": CODEC_VERSION})
         if profile_stages:
@@ -420,9 +410,6 @@ def main(argv=None):
                          "run's days (requires --chunk-buckets)")
     ap.add_argument("--chunk-buckets", type=int, default=None,
                     help="chunked STL gap-fill chunk size in buckets")
-    ap.add_argument("--anchored-chunks", action="store_true",
-                    help="time-anchored Gorilla chunk windows (stable keys; "
-                         "enables incremental chunk re-encode)")
     ap.add_argument("--profile-stages", action="store_true",
                     help="materialize the chunk encode before the merge so "
                          "stage walls split encode vs merge (adds a job "
@@ -449,8 +436,6 @@ def main(argv=None):
                                do_gorilla=not args.no_gorilla,
                                stl_kwargs=stl_kwargs,
                                incremental_gapfill=args.incremental_gapfill,
-                               chunk_seconds=(DEFAULT_CHUNK_SECONDS
-                                              if args.anchored_chunks else None),
                                profile_stages=args.profile_stages)
         print(json.dumps(metrics["summary"]))
         return
@@ -469,8 +454,6 @@ def main(argv=None):
                                do_gorilla=not args.no_gorilla,
                                stl_kwargs=stl_kwargs,
                                incremental_gapfill=args.incremental_gapfill,
-                               chunk_seconds=(DEFAULT_CHUNK_SECONDS
-                                              if args.anchored_chunks else None),
                                profile_stages=args.profile_stages)
         shutil.rmtree(out, ignore_errors=True)
         if i >= args.warmup:

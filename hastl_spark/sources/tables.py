@@ -361,10 +361,9 @@ class KeyedTable:
 
         ``replace_partitions=True`` switches to delete-then-insert semantics:
         affected partitions are fully superseded by the update rows instead
-        of key-merged — for derived tables regenerated wholesale per
-        partition (e.g. Gorilla chunk sets, whose chunk_start keys shift
-        when a backfill moves a chunk boundary: a keyed upsert would leave
-        stale overlapping chunks behind).
+        of key-merged — for partitions rewritten wholesale from their kept
+        rows (retention's boundary-partition rewrite, ``delete_where``),
+        where a keyed upsert would leave the removed rows behind.
 
         ``keep_data=True`` leaves the written data CACHED and returns it in
         the record as ``record["data"]`` (caller unpersists). When the merge

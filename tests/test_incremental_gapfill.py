@@ -8,8 +8,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from hastl_spark.operators.gapfill import (default_halo_buckets,
+                                           gapfill_halo_buckets,
                                            touched_chunk_ids)
-from hastl_spark.plans.rollup_job import clip_touched_chunks, run_pipeline
+from hastl_spark.plans.rollup_job import (DEFAULT_CHUNK_SECONDS,
+                                          clip_touched_chunks, run_pipeline)
 from hastl_spark.sources.sequences import SEQS_PER_BUCKET, generate_sequences
 from hastl_spark.sources.tables import PART_SEP, KeyedTable
 
@@ -31,8 +33,12 @@ def _bucket_of(doc_id_col):
 
 def test_default_halo_without_explicit_qs():
     # the pipeline passes only {"chunk_buckets": N}; halo derivation must
-    # fall back to stl_gapfill's q_s default instead of raising
-    assert default_halo_buckets(52) == default_halo_buckets(52, q_s=19) > 0
+    # fall back to stl_gapfill's defaults instead of raising
+    assert (gapfill_halo_buckets(chunk_buckets=1440)
+            == default_halo_buckets(52, q_s=19) > 0)
+    assert gapfill_halo_buckets(**STL_KW) == default_halo_buckets(52, q_s=7)
+    # an explicit 0 is a halo, not a request for the default
+    assert gapfill_halo_buckets(**STL_KW, halo_buckets=0) == 0
 
 
 def test_touched_chunk_ids():
@@ -61,6 +67,21 @@ def test_incremental_without_chunks_fails_before_any_write(spark, tmp_path):
     with pytest.raises(ValueError, match="chunk_buckets"):
         run_pipeline(spark, seqs, str(out), incremental_gapfill=True,
                      stl_kwargs=None)
+    assert list(out.rglob("_manifest.json")) == []
+
+
+@pytest.mark.parametrize("chunk_seconds", [
+    {"1m": 86400}, None, {**DEFAULT_CHUNK_SECONDS, "1h": 0}])
+def test_bad_chunk_seconds_fails_before_any_write(spark, tmp_path,
+                                                  chunk_seconds):
+    # a partial map used to raise KeyError in the chunk stage, after every
+    # tier had been published
+    seqs = generate_sequences(spark, n_sources=1, n_buckets=1440,
+                              base_rate=1.0, tok_lo=4, tok_hi=8,
+                              with_tokens=True)
+    out = tmp_path / "bad"
+    with pytest.raises(ValueError, match="chunk_seconds"):
+        run_pipeline(spark, seqs, str(out), chunk_seconds=chunk_seconds)
     assert list(out.rglob("_manifest.json")) == []
 
 
@@ -131,8 +152,8 @@ def test_incremental_rewrites_only_touched_days(spark, tmp_path):
 
 
 def test_gorilla_chunks_time_anchored(spark):
-    """chunk_seconds mode: one chunk per (source, window); chunk_start is
-    the WINDOW start (stable under backfill), chunk_end the last point."""
+    """One chunk per (source, window); chunk_start is the WINDOW start
+    (stable under backfill), chunk_end the last point."""
     import pandas as pd
 
     from hastl_spark.operators.chunks import decode_chunks_df, gorilla_chunks
@@ -151,23 +172,33 @@ def test_gorilla_chunks_time_anchored(spark):
     pts = decode_chunks_df(gorilla_chunks(df, "sum_n_tok",
                                           chunk_seconds=86400)).toPandas()
     assert len(pts) == 3 * 1440 and pts["value"].sum() == pdf.sum_n_tok.sum()
+    with pytest.raises(ValueError, match="chunk_seconds"):
+        gorilla_chunks(df, "sum_n_tok", chunk_seconds=0)
 
 
 @pytest.mark.slow
 def test_chunking_discipline_switch_drops_stale_chunks(spark, tmp_path):
-    """Switching an existing chunks table from row-count to time-anchored
-    chunking (or back) must NOT leave stale overlapping chunks behind: the
-    discipline is a table property, and a switch forces a full re-encode
-    published as an overwrite snapshot (round-3 ADVICE)."""
+    """A chunks table stamped with the retired row-count discipline must
+    NOT keep its stale overlapping chunks: a run over it forces a full
+    re-encode published as an overwrite snapshot, never a keyed merge."""
+    from hastl_spark.operators.chunks import gorilla_chunks
+
     CS = {"1m": 86400, "1h": 365 * 86400, "1d": 3650 * 86400,
           "gapfill_1m": 86400}
     seqs = _seqs(spark)
     out = str(tmp_path / "switch")
     run_pipeline(spark, seqs, out, check_invariant=False,
-                 stl_kwargs={k: v for k, v in STL_KW.items()})
+                 stl_kwargs=dict(STL_KW), chunk_seconds=CS)
     ch_t = KeyedTable(f"{out}/chunks", ["source", "tier", "chunk_start"])
+    # simulate a row-count-era table: 1m chunks cut on other boundaries
+    # (6-hour windows) overlap the day windows' points
+    t1m = KeyedTable(f"{out}/tier_1m", ["source", "bucket"]).read(spark)
+    legacy = gorilla_chunks(t1m, "sum_n_tok", chunk_seconds=6 * 3600)
+    ch_t.merge_upsert(spark, legacy.withColumn("tier", F.lit("1m")),
+                      watermark_col="chunk_end",
+                      props={"chunking": "rowcount"})
     assert ch_t.prop("chunking") == "rowcount"
-    n_rowcount = ch_t.read(spark).count()
+    n_stale = ch_t.read(spark).filter("tier = '1m'").count()
 
     m2 = run_pipeline(spark, seqs, out, check_invariant=False,
                       stl_kwargs=dict(STL_KW), incremental_gapfill=True,
@@ -178,7 +209,7 @@ def test_chunking_discipline_switch_drops_stale_chunks(spark, tmp_path):
     assert ch_t.prop("chunking") == "anchored"
     after = ch_t.read(spark).toPandas()
     # the anchored 1m tier has one chunk per (source, day-window): any
-    # surviving row-count chunk would add overlapping rows beyond that
+    # surviving legacy chunk would add overlapping rows beyond that
     assert len(after[after.tier == "1m"]) == 2 * N_DAYS
     # total decoded points must equal the tier sizes exactly (no dupes):
     # compare per-tier point sums against a fresh anchored-only run
@@ -190,7 +221,7 @@ def test_chunking_discipline_switch_drops_stale_chunks(spark, tmp_path):
     b = (f_t.read(spark).toPandas().groupby("tier").n_points.sum()
          .sort_index())
     assert (a == b).all()
-    assert n_rowcount > 0  # the first run really had row-count chunks
+    assert n_stale > 2 * N_DAYS  # the legacy table really had stale chunks
 
 
 @pytest.mark.slow

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from hastl_spark.kernel import canonicalize_stl_params
 from hastl_spark.kernel.stl import stl_filt
-from hastl_spark.operators.chunks import decode_chunks, gorilla_chunks
+from hastl_spark.operators.chunks import decode_chunks_df, gorilla_chunks
 from hastl_spark.operators.densify import densify_grid
 from hastl_spark.operators.gapfill import stl_gapfill
 from hastl_spark.operators.rollup import (
@@ -171,8 +171,11 @@ def test_merge_stats_from_parquet_footers(spark, r1m, tmp_path):
 
 
 def test_gorilla_chunks_roundtrip(spark, r1m):
-    chunks = gorilla_chunks(r1m, "sum_n_tok", max_points_per_chunk=100).toPandas()
-    pts = decode_chunks(chunks)
+    # 100-minute windows: several chunks per source
+    ch = gorilla_chunks(r1m, "sum_n_tok", chunk_seconds=6000)
+    chunks = ch.toPandas()
+    assert chunks.groupby("source").size().min() > 1
+    pts = decode_chunks_df(ch).toPandas()
     pdf = r1m.toPandas().sort_values(["source", "bucket"])
     for src, g in pts.groupby("source"):
         sub = pdf[pdf.source == src]
@@ -221,28 +224,28 @@ def test_day_partitioned_merge_rewrites_only_touched_days(spark, r1m, tmp_path):
 
 
 def test_replace_partitions_supersedes_stale_chunk_rows(spark, r1m, tmp_path):
-    """Backfill scenario from ADVICE: chunk regeneration that shifts chunk
-    boundaries must fully supersede the partition's old chunk rows (a keyed
-    upsert would leave stale overlapping chunks -> double-counted points)."""
-    from hastl_spark.operators.chunks import decode_chunks
-
+    """Chunk regeneration that shifts chunk boundaries (here: a backfill
+    re-encoded with a different window span) must fully supersede the
+    partition's old chunk rows (a keyed upsert would leave stale
+    overlapping chunks -> double-counted points)."""
     t = KeyedTable(str(tmp_path / "chunks"), ["source", "tier", "chunk_start"],
                    part_spec={"cols": ["source", "tier"]})
     late = r1m.orderBy("source", "bucket")  # deterministic
     # run 1: chunks over buckets EXCLUDING each source's first 3 (simulates
-    # the backfill arriving later); small chunk size so boundaries shift
+    # the backfill arriving later)
     from pyspark.sql import Window
     w = Window.partitionBy("source").orderBy("bucket")
     ranked = late.withColumn("_rn", F.row_number().over(w))
     ch1 = gorilla_chunks(ranked.filter("_rn > 3").drop("_rn"), "sum_n_tok",
-                         max_points_per_chunk=100).withColumn("tier", F.lit("1m"))
+                         chunk_seconds=6000).withColumn("tier", F.lit("1m"))
     t.merge_upsert(spark, ch1, replace_partitions=True)
-    # run 2 (backfill): chunks regenerated over the FULL series
+    # run 2 (backfill): chunks regenerated over the FULL series with
+    # another window span, so the chunk_start keys shift
     ch2 = gorilla_chunks(ranked.drop("_rn"), "sum_n_tok",
-                         max_points_per_chunk=100).withColumn("tier", F.lit("1m"))
+                         chunk_seconds=3600).withColumn("tier", F.lit("1m"))
     t.merge_upsert(spark, ch2, replace_partitions=True)
 
-    pts = decode_chunks(t.read(spark).toPandas())
+    pts = decode_chunks_df(t.read(spark)).toPandas()
     exp = r1m.toPandas()
     # no double counting: decoded point count == input rows exactly
     assert len(pts) == len(exp)

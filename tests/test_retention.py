@@ -87,8 +87,8 @@ def test_chunk_retention_drops_aged_partitions_metadata_only(spark, tmp_path):
     from hastl_spark.plans.retention import apply_chunk_retention
     from hastl_spark.sources.tables import CHUNK_SPEC, PART_SEP
 
-    # 3 months of hourly points, one chunk per month (encoded per-month so
-    # chunk boundaries align with partitions for crisp assertions)
+    # 3 months of hourly points in day windows (encoded per month, so no
+    # window straddles two months and chunks align with partitions)
     ch = None
     for start, hours in (("2026-01-01", 31 * 24), ("2026-02-01", 28 * 24),
                          ("2026-03-01", 31 * 24)):
@@ -96,7 +96,8 @@ def test_chunk_retention_drops_aged_partitions_metadata_only(spark, tmp_path):
             "source": "s1",
             "bucket": pd.date_range(start, periods=hours, freq="3600s"),
             "sum_n_tok": 5.0})
-        cm = gorilla_chunks(spark.createDataFrame(pdf), "sum_n_tok")
+        cm = gorilla_chunks(spark.createDataFrame(pdf), "sum_n_tok",
+                            chunk_seconds=86400)
         ch = cm if ch is None else ch.unionByName(cm)
     ch = ch.withColumn("tier", F.lit("1m"))
     ch = ch.unionByName(ch.withColumn("tier", F.lit("1d")))
